@@ -21,12 +21,8 @@ NonBlockingHashMap but distributed and fault-tolerant.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -37,6 +33,7 @@ from pyspark.sql.types import (
 
 from riemann_spark.schema import DEFAULT_TTL
 from riemann_spark.streaming.ops import with_event_timestamp
+from riemann_spark.streaming.stateful_ops import _fold_update, _keyed_fold
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -60,64 +57,52 @@ STATE_SCHEMA = StructType(
 )
 
 
-def _update(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-    keep_keys: tuple[str, ...] = (),
-) -> Iterator[pd.DataFrame]:
-    host, service = key
+def _reaper(keep_keys: tuple[str, ...] = ()) -> dict:
+    """The index as a keyed fold: last-write-wins by (time, event_id) —
+    the batch index's documented deterministic ordering — emitting the
+    key's latest event once per invocation, with an event-time timer at
+    time + ttl."""
 
-    if state.hasTimedOut:
-        # reaper fire: synthetic expired event at the watermark clock.
-        # keep_keys (core.clj:284-301, reaper :keep-keys) carries the
-        # named fields of the indexed event onto the expired row —
-        # default none beyond the key, exactly the reference's
-        # [:host :service]; state/time are always overwritten.
-        now = state.getCurrentWatermarkMs() / 1000.0
-        prev = state.get if state.exists else None
-        state.remove()
+    # a null-time event can neither be ordered nor expire: the index
+    # skips it
+    def step(g, best, eid, t, m, st, ttl):
+        if t is not None and (best is None or (t, eid) > (best[2], best[4])):
+            return st, m, t, ttl, eid
+        return best
+
+    def finish(g, best):
+        if best[0] == "expired":
+            return None  # tombstone deletes the key (index.clj:98-101)
+        g.emit(*g.key, *best[:4])
+        return best
+
+    # reaper fire: synthetic expired event at the watermark clock.
+    # keep_keys (core.clj:284-301, reaper :keep-keys) carries the
+    # named fields of the indexed event onto the expired row —
+    # default none beyond the key, exactly the reference's
+    # [:host :service]; state/time are always overwritten.
+    def on_timer(g, prev):
         metric = prev[1] if prev is not None and "metric" in keep_keys else None
         ttl = prev[3] if prev is not None and "ttl" in keep_keys else None
-        yield pd.DataFrame(
-            [[host, service, "expired", metric, now, ttl]],
-            columns=[f.name for f in OUTPUT_SCHEMA.fields],
-        )
-        return
+        g.emit(*g.key, "expired", metric, g.now / 1000.0, ttl)
+        return None
 
-    best: tuple[Any, ...] | None = state.get if state.exists else None
-    for pdf in pdfs:
-        for row in pdf.itertuples(index=False):
-            cand = (
-                row.state,
-                None if pd.isna(row.metric) else float(row.metric),
-                float(row.time),
-                None if pd.isna(row.ttl) else float(row.ttl),
-                int(row.event_id),
-            )
-            # last-write-wins by (time, event_id) — the batch index's
-            # documented deterministic ordering
-            if best is None or (cand[2], cand[4]) > (best[2], best[4]):
-                best = cand
+    # the harness clips a late-arriving already-expired entry to fire
+    # at the next watermark advance (timers must be ahead of it)
+    def deadline(g, best):
+        return int((best[2] + (best[3] if best[3] is not None else DEFAULT_TTL)) * 1000)
 
-    if best is None:
-        return
-    if best[0] == "expired":
-        # tombstone deletes the key (index.clj:98-101)
-        if state.exists:
-            state.remove()
-        return
-
-    state.update(best)
-    expiry_ms = int((best[2] + (best[3] if best[3] is not None else DEFAULT_TTL)) * 1000)
-    # timers must be ahead of the watermark; clip a late-arriving
-    # already-expired entry to fire at the next watermark advance
-    wm = state.getCurrentWatermarkMs()
-    state.setTimeoutTimestamp(max(expiry_ms, wm + 1))
-    yield pd.DataFrame(
-        [[host, service, best[0], best[1], best[2], best[3]]],
-        columns=[f.name for f in OUTPUT_SCHEMA.fields],
+    return dict(
+        cols=("event_id", "time", "metric", "state", "ttl"), init=None,
+        step=step, finish=finish, on_timer=on_timer, deadline=deadline,
+        timeout=GroupStateTimeout.EventTimeTimeout,
     )
+
+
+def _update(key, pdfs, state, keep_keys: tuple[str, ...] = ()):
+    """One index invocation for ``key`` (the registered update closure,
+    callable directly)."""
+    return _fold_update(OUTPUT_SCHEMA, **_reaper(keep_keys))(key, pdfs, state)
 
 
 def streaming_index(
@@ -135,8 +120,6 @@ def streaming_index(
     ``[:host :service]``). Feed the output back to a source topic for
     the reference's reinject loop (SURVEY §2.7 — Spark DAGs are
     acyclic, so feedback is a Kafka round-trip)."""
-    from riemann_spark.streaming.state_api import apply_with_state
-
     # a bare string ("metric") must become a one-element tuple —
     # tuple("metric") would silently explode it into characters
     if isinstance(keep_keys, str):
@@ -158,13 +141,9 @@ def streaming_index(
             f'(or "all")'
         )
 
-    def update(key, pdfs, state):
-        yield from _update(key, pdfs, state, keep_keys=kk)
-
     sdf = with_event_timestamp(sdf).withWatermark("event_ts", watermark)
-    return apply_with_state(
-        sdf, ("host", "service"), update, OUTPUT_SCHEMA, STATE_SCHEMA,
-        timeout=GroupStateTimeout.EventTimeTimeout,
+    return _keyed_fold(
+        sdf, ("host", "service"), OUTPUT_SCHEMA, STATE_SCHEMA, **_reaper(kk)
     )
 
 

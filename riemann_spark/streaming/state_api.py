@@ -14,9 +14,10 @@ legacy API is the only exercisable path here. This module keeps the
 migration mechanical when that lands:
 
 - ``apply_with_state(...)`` is THE call site every operator routes
-  through: legacy path today; flip ``use_tws=True`` (or set
-  ``RIEMANN_SPARK_TWS=1``) where protobuf exists and the SAME update
-  functions run under a ``StatefulProcessor`` shim, unchanged.
+  through (stateful_ops._keyed_fold registers every keyed fold through
+  it): legacy path today; set ``RIEMANN_SPARK_TWS=1`` where protobuf
+  exists and the SAME update functions run under a
+  ``StatefulProcessor`` shim, unchanged.
 - ``TwsGroupStateShim`` maps the GroupState surface the operators
   actually use (exists/get/update/remove, processing-time timeouts,
   hasTimedOut) onto TWS ValueState + timers. The mapping is 1:1:
@@ -89,49 +90,56 @@ STATE_TABLE = {
     },
     "streaming_fixed_event_window": {
         "keys": ("host", "service"),
-        "state": "(buf array<double>, times array<double>, window_id long)",
+        "state": "(buf_m array<double>, buf_t array<double>, win long)"
+                 "  # the open window's metrics + times, window ordinal",
         "timeout": "none",
         "emission": "one row per filled n-window",
     },
     "streaming_fill_in_last": {
         "keys": ("host", "service"),
-        "state": "(last metric/state/time + deadline)",
+        "state": "(state string, metric double, time double, "
+                 "event_id long)  # the last event; no stored deadline",
         "timeout": "processing-time (deferred timers)",
         "emission": "gap-fill rows while silent",
     },
     "streaming_batch": {
         "keys": ("host", "service"),
-        "state": "(buffered rows + deadline)",
+        "state": "(buf_m array<double>, buf_t array<double>, bid long, "
+                 "deadline long)  # buffered rows + absolute deadline",
         "timeout": "processing-time (n-or-dt flush)",
         "emission": "flush on count n or deadline dt",
     },
     "streaming_top": {
-        "keys": ("__g" ,),
-        "state": "(k-sized top set: hosts/services/metrics arrays)",
+        "keys": ("__g",),
+        "state": "(hosts array<string>, services array<string>, "
+                 "metrics array<double>, times array<double>)"
+                 "  # the k-sized top set",
         "timeout": "none",
         "emission": "top/bottom dual stream + demotion events",
     },
     "streaming_throttle": {
         "keys": ("host", "service"),
-        "state": "(window_start double, seen long)",
+        "state": "(bucket long, sent long)  # open dt window + sent count",
         "timeout": "none",
         "emission": "first n per window, rest dropped",
     },
     "streaming_changed": {
         "keys": ("host", "service"),
-        "state": "(last string)",
+        "state": "(prev string)  # the last value of the field",
         "timeout": "none",
         "emission": "edge events only",
     },
     "streaming_project": {
         "keys": ("__g",),
-        "state": "(one remembered event per pattern slot)",
+        "state": "(ts array<double>, ids array<long>, ms array<double>)"
+                 "  # one remembered event per pattern slot; with_expiry "
+                 "adds svcs/sts/ttls arrays",
         "timeout": "none",
         "emission": "projected vector per update",
     },
     "streaming_anomaly_zscore": {
         "keys": ("host", "service"),
-        "state": "(n long, mean double, m2 double)  # Welford",
+        "state": "(buf array<double>)  # last n_window metrics",
         "timeout": "none",
         "emission": "per event with running z",
     },
@@ -150,37 +158,47 @@ STATE_TABLE = {
     },
     "streaming_rollup": {
         "keys": ("host", "service"),
-        "state": "(sent long, rolled-tail aggregate, deadline long)",
+        "state": "(sent long, buf_n long, buf_sum double, buf_t0 double, "
+                 "buf_t1 double, last_state string, deadline long)"
+                 "  # rolled-tail aggregate",
         "timeout": "processing-time (absolute deadline; idle keys removed)",
         "emission": "first n pass per dt window, tail as one digest row",
     },
     "streaming_ddt_interval": {
         "keys": ("host", "service"),
-        "state": "(e1/e2 samples, current, deadline long, expires double)",
+        "state": "(e1_t double, e1_m double, e2_t double, e2_m double, "
+                 "cur_t double, cur_m double, deadline long, "
+                 "expires double)  # e1/e2 samples + current",
         "timeout": "processing-time (every-n tick until expired)",
         "emission": "d(metric)/d(event-time) per tick; 0 in silence",
     },
     "streaming_interpolate_constant": {
         "keys": ("host", "service"),
-        "state": "(template state/metric, deadline long, expires double)",
+        "state": "(state string, metric double, deadline long, "
+                 "expires double)  # the template event",
         "timeout": "processing-time (every-interval tick until expired)",
         "emission": "latest-event copy per tick; expired pass-through",
     },
     "streaming_rate_interval": {
         "keys": ("host", "service"),
-        "state": "(template host/service/state, ttl, sum, deadline, expires)",
+        "state": "(t_host string, t_service string, t_state string, "
+                 "ttl double, sum double, deadline long, expires double)"
+                 "  # template + interval sum",
         "timeout": "processing-time (every-interval tick until expired)",
         "emission": "sum/interval every tick, 0 in silence, ttl decay",
     },
     "streaming_stable": {
         "keys": ("host", "service"),
-        "state": "(prev string, has_prev long, buffered events arrays)",
+        "state": "(prev string, has_prev long, b_eids array<long>, "
+                 "b_times array<double>, b_metrics array<double>, "
+                 "b_states array<string>)  # buffered events",
         "timeout": "processing-time (head+dt confirmation flush)",
         "emission": "stable events pass; buffer flushes on dt proof",
     },
     "streaming_clock_skew": {
         "keys": ("__g",),
-        "state": "(hosts/times/arrs arrays)  # per-host clock entries",
+        "state": "(hosts array<string>, times array<double>, "
+                 "arrs array<double>)  # per-host clock entries",
         "timeout": "none",
         "emission": "per event with metric = time - median clock",
     },
@@ -211,7 +229,8 @@ STATE_TABLE = {
     },
     "index_stream (expire reaper)": {
         "keys": ("host", "service"),
-        "state": "(latest event + ttl deadline)",
+        "state": "(state string, metric double, time double, ttl double, "
+                 "event_id long)  # the latest event; expiry at time + ttl",
         "timeout": "event-time (watermark-driven expiry)",
         "emission": "synthetic 'expired' rows at ttl",
     },
@@ -237,28 +256,24 @@ def apply_with_state(
     update: Callable,
     out_schema: StructType,
     state_schema: StructType,
-    output_mode: str = "append",
     timeout=GroupStateTimeout.NoTimeout,
-    use_tws: bool | None = None,
 ) -> DataFrame:
     """Route a per-key state machine through the supported state API.
 
     Today: ``applyInPandasWithState`` (the only path exercisable in
-    this container). Where ``google.protobuf`` exists, ``use_tws=True``
-    (or RIEMANN_SPARK_TWS=1) runs the SAME ``update`` through
+    this container). Where ``google.protobuf`` exists,
+    RIEMANN_SPARK_TWS=1 runs the SAME ``update`` through
     ``transformWithStateInPandas`` via the shim below — the operators
     themselves never change.
     """
     if _capture_hook is not None:
         _capture_hook(keys, update, out_schema, state_schema, timeout)
         return sdf
-    if use_tws is None:
-        use_tws = _tws_available()
-    if use_tws:
+    if _tws_available():
         return _apply_tws(sdf, keys, update, out_schema, state_schema,
-                          output_mode, timeout)
+                          timeout)
     return sdf.groupBy(*keys).applyInPandasWithState(
-        update, out_schema, state_schema, output_mode, timeout
+        update, out_schema, state_schema, "append", timeout
     )
 
 
@@ -310,7 +325,7 @@ class TwsGroupStateShim:
 
 
 def _apply_tws(sdf, keys, update, out_schema, state_schema,
-               output_mode, timeout) -> DataFrame:
+               timeout) -> DataFrame:
     from pyspark.sql.streaming.stateful_processor import (  # Spark 4 API
         StatefulProcessor,
         StatefulProcessorHandle,
@@ -342,6 +357,6 @@ def _apply_tws(sdf, keys, update, out_schema, state_schema,
             pass
 
     return sdf.groupBy(*keys).transformWithStateInPandas(
-        _Proc(), outputStructType=out_schema, outputMode=output_mode,
+        _Proc(), outputStructType=out_schema, outputMode="append",
         timeMode=time_mode,
     )

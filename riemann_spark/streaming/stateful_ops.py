@@ -6,11 +6,30 @@ All are per-key state machines written against the
 ``state_api.apply_with_state`` — the single seam where the Spark 4
 ``transformWithStateInPandas`` API plugs in once ``google.protobuf``
 is available (see state_api.STATE_TABLE for each operator's state
-contract). Within a micro-batch, rows are processed in
-(time, event_id) order — the deterministic stand-in for the
-reference's arrival order; cross-batch disorder is handled by each
-operator's own semantics (ewma's negative Δt branch, the index's
-max-by-time).
+contract).
+
+Every operator (and index_stream's reaper) is one ``_keyed_fold``: it
+declares its input columns, its initial state and a plain-Python
+``step(g, state, *row) -> state``; timer operators add an
+``on_timer(g, state) -> state`` leg and a ``deadline`` for the next
+fire. The harness owns the shared row contract, stated once here:
+
+- ordering: within a micro-batch, rows are folded in (time, event_id)
+  order — the deterministic stand-in for the reference's arrival
+  order — or, when the operator reads no ``time`` column (the corpus
+  operators), in doc_id order; null times sort last. Cross-batch
+  disorder is handled by each operator's own semantics (ewma's
+  negative Δt branch, the index's max-by-time);
+- null decoding: every null / NaN cell reaches ``step`` as None, and
+  numeric columns arrive as plain int / float (``_DECODE``). A null
+  time keeps the reading a NaN time has: it is never newer than
+  another event (``_newer``) and never ages a buffer or a clock;
+- state: the stored tuple (or ``init`` for a new key) passes through
+  ``load`` into the fold and back through ``finish``; a fold state of
+  None removes the key's state; the timer is re-armed from the stored
+  tuple after every invocation (``deadline``), or not at all;
+- emission: ``g.emit(*row)`` appends an output row in the order of the
+  operator's output schema; one frame per invocation.
 
 - ``streaming_ewma``: half-life EWMA (streams.clj:979-1013) — exact
   port of the three Δt branches: decay r^Δt forward, back-decayed
@@ -29,12 +48,12 @@ max-by-time).
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator, Sequence
+from collections.abc import Callable, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -58,13 +77,130 @@ _EV_OUT = StructType(
     ]
 )
 
+_NO_TIMEOUT = GroupStateTimeout.NoTimeout
+_PROC_TIMEOUT = GroupStateTimeout.ProcessingTimeTimeout
 
-def _sorted_rows(pdfs: Iterator[pd.DataFrame], cols: list[str]) -> pd.DataFrame:
-    parts = [pdf[cols] for pdf in pdfs]
-    if not parts:
-        return pd.DataFrame(columns=cols)
-    out = pd.concat(parts, ignore_index=True)
-    return out.sort_values(["time", "event_id"])
+
+# ------------------------------------------------------- keyed fold --
+
+#: Numeric input columns, decoded to plain Python numbers by name.
+_DECODE = {
+    "event_id": int, "doc_id": int, "time_us": int, "n_tok": int,
+    "time": float, "metric": float, "ttl": float, "priority": float,
+    "mu": float, "sd": float,
+}
+
+
+def _decode(col: pd.Series) -> list:
+    conv = _DECODE.get(col.name)
+    vals = col.tolist()
+    if col.hasnans:
+        return [None if na else conv(v) if conv else v
+                for v, na in zip(vals, col.isna().tolist())]
+    return list(map(conv, vals)) if conv else vals
+
+
+class _Group:
+    """One invocation of a keyed fold: the group key, the clock in ms
+    (processing time, or the watermark for event-time timers), the
+    number of rows in this invocation and the rows emitted so far."""
+
+    __slots__ = ("key", "now", "n", "out")
+
+    def __init__(self, key: tuple, now: int):
+        self.key, self.now, self.n, self.out = key, now, 0, []
+
+    def emit(self, *row) -> None:
+        self.out.append(row)
+
+
+def _fold_update(
+    out_schema: StructType,
+    cols: Sequence[str],
+    init,
+    step: Callable,
+    *,
+    load: Callable | None = None,
+    finish: Callable | None = None,
+    on_timer: Callable | None = None,
+    deadline: Callable | None = None,
+    timeout=_NO_TIMEOUT,
+) -> Callable:
+    """Build the ``update(key, pdfs, state)`` closure of a keyed fold
+    (the row contract is in the module docstring)."""
+    names, cols = out_schema.fieldNames(), list(cols)
+    if "time" in cols:
+        ti, ei = cols.index("time"), cols.index("event_id")
+        order = lambda r: (r[ti] is None, r[ti] or 0.0, r[ei])  # noqa: E731
+    else:
+        di = cols.index("doc_id")
+        order = lambda r: r[di]  # noqa: E731
+    event_time = timeout == GroupStateTimeout.EventTimeTimeout
+
+    def update(key, pdfs, state):
+        g = _Group(key, state.getCurrentWatermarkMs() if event_time
+                   else state.getCurrentProcessingTimeMs())
+        s = state.get if state.exists else init
+        if s is not None and load is not None:
+            s = load(s)
+        if state.hasTimedOut:
+            s = on_timer(g, s)
+        else:
+            columns = [[] for _ in cols]
+            for pdf in pdfs:
+                for acc, c in zip(columns, cols):
+                    acc.extend(_decode(pdf[c]))
+            rows = sorted(zip(*columns), key=order)
+            g.n = len(rows)
+            for row in rows:
+                s = step(g, s, *row)
+        if s is not None and finish is not None:
+            s = finish(g, s)
+        if s is None:
+            if state.exists:
+                state.remove()
+        else:
+            state.update(s)
+            at = deadline(g, s) if deadline is not None else None
+            if at is not None and event_time:
+                state.setTimeoutTimestamp(max(at, g.now + 1))
+            elif at is not None:
+                state.setTimeoutDuration(max(int(at - g.now), 1))
+        if g.out:
+            yield pd.DataFrame(g.out, columns=names)
+
+    return update
+
+
+def _keyed_fold(sdf, keys, out_schema, state_schema, cols, init, step,
+                timeout=_NO_TIMEOUT, **kw):
+    """Register a keyed fold (see ``_fold_update``) through the state
+    API seam."""
+    update = _fold_update(out_schema, cols, init, step, timeout=timeout, **kw)
+    return apply_with_state(sdf, keys, update, out_schema, state_schema,
+                            timeout=timeout)
+
+
+def _columns(rows, n: int) -> list[list]:
+    """Transpose row tuples into n parallel lists (array-per-field state)."""
+    return [list(c) for c in zip(*rows)] if rows else [[] for _ in range(n)]
+
+
+def _newer(t, eid, best_t, best_eid) -> bool:
+    """(t, eid) > (best_t, best_eid), where a null time on either side
+    is never newer — the comparison a NaN time gives."""
+    return t is not None and best_t is not None and (t, eid) > (best_t, best_eid)
+
+
+def _rq(v: float) -> int:
+    """Quantize to the 1e-6 integer grid, HALF_UP away from zero —
+    Spark's F.round / DuckDB round(); Python's round() is banker's and
+    would diverge on exact .5."""
+    return (
+        int(math.floor(v * 1e6 + 0.5))
+        if v >= 0
+        else -int(math.floor(-v * 1e6 + 0.5))
+    )
 
 
 # ------------------------------------------------------------- ewma --
@@ -78,45 +214,37 @@ def streaming_ewma(sdf: DataFrame, halflife: float, keys: Sequence[str] = ("host
         [StructField("m", DoubleType()), StructField("t", DoubleType())]
     )
 
-    def update(key, pdfs, state: GroupState):
-        # Reference emission contract (streams.clj:1012 merge event
-        # m-new): the emitted event carries the STATE's time — the
-        # ratcheted time-old for the negative/zero Δt branches, never
-        # the out-of-order event's own earlier time (streams_test.clj:
-        # 1283-1290 expects {:metric 0.875 :time 2} for the t=1
-        # straggler) — and a nil-metric event passes through UNCHANGED
-        # (m-new nil ⇒ merge is identity, state untouched).
-        host, service = key
-        m, t_state = state.get if state.exists else (0.0, None)
-        rows = _sorted_rows(pdfs, ["event_id", "time", "metric"])
-        out = []
-        for row in rows.itertuples(index=False):
-            t_event = None if pd.isna(row.time) else float(row.time)
-            if pd.isna(row.metric):
-                out.append((host, service, int(row.event_id), t_event, None))
-                continue
-            t_new = t_event if t_event is not None else 0.0
-            t_old = t_state if t_state is not None else t_new
-            dt = t_new - t_old
-            x = float(row.metric)
-            if dt > 0:
-                m = c_new * x + m * (r ** dt)
-                t_state = t_new
-            elif dt < 0:
-                m = m + c_new * x * (r ** abs(dt))
-                t_state = t_old
-            else:
-                m = m + c_new * x
-                t_state = t_old
-            out.append((host, service, int(row.event_id), t_state, m))
-        state.update((m, t_state if t_state is not None else 0.0))
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in _EV_OUT.fields])
+    # Reference emission contract (streams.clj:1012 merge event
+    # m-new): the emitted event carries the STATE's time — the
+    # ratcheted time-old for the negative/zero Δt branches, never
+    # the out-of-order event's own earlier time (streams_test.clj:
+    # 1283-1290 expects {:metric 0.875 :time 2} for the t=1
+    # straggler) — and a nil-metric event passes through UNCHANGED
+    # (m-new nil ⇒ merge is identity, state untouched).
+    def step(g, s, eid, t_event, x):
+        if x is None:
+            g.emit(*g.key, eid, t_event, None)
+            return s
+        m, t_state = s
+        t_new = t_event if t_event is not None else 0.0
+        t_old = t_state if t_state is not None else t_new
+        dt = t_new - t_old
+        if dt > 0:
+            m = c_new * x + m * (r ** dt)
+            t_state = t_new
+        elif dt < 0:
+            m = m + c_new * x * (r ** abs(dt))
+            t_state = t_old
+        else:
+            m = m + c_new * x
+            t_state = t_old
+        g.emit(*g.key, eid, t_state, m)
+        return m, t_state
 
-    return apply_with_state(
-        sdf, keys, update, _EV_OUT, state_schema,
-        timeout=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        sdf, keys, _EV_OUT, state_schema, ("event_id", "time", "metric"),
+        (0.0, None), step,
+    )
 
 
 # ---------------------------------------------- count sliding window --
@@ -132,35 +260,17 @@ def streaming_moving_event_window(
     )
     state_schema = StructType([StructField("buf", ArrayType(DoubleType()))])
 
-    def update(key, pdfs, state: GroupState):
-        host, service = key
-        (buf,) = state.get if state.exists else ([],)
-        buf = list(buf)
-        rows = _sorted_rows(pdfs, ["event_id", "time", "metric"])
-        out = []
-        for row in rows.itertuples(index=False):
-            if not pd.isna(row.metric):
-                buf.append(float(row.metric))
-                del buf[:-n]
-            out.append(
-                (
-                    host,
-                    service,
-                    int(row.event_id),
-                    float(row.time),
-                    float(row.metric) if not pd.isna(row.metric) else None,
-                    float(sum(buf)),
-                    len(buf),
-                )
-            )
-        state.update((buf,))
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
+    def step(g, buf, eid, t, m):
+        if m is not None:
+            buf.append(m)
+            del buf[:-n]
+        g.emit(*g.key, eid, t, m, float(sum(buf)), len(buf))
+        return buf
 
-    return apply_with_state(
-        sdf, keys, update, out_schema, state_schema,
-        timeout=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        sdf, keys, out_schema, state_schema, ("event_id", "time", "metric"),
+        ([],), step, load=lambda st: list(st[0]), finish=lambda g, buf: (buf,),
+    )
 
 
 # ----------------------------------------------- time sliding window --
@@ -219,47 +329,22 @@ def streaming_moving_time_window(
         ]
     )
 
-    def update(key, pdfs, state: GroupState):
-        host, service = key
-        if state.exists:
-            cutoff, eids, times, metrics = state.get
-            buf = list(zip(eids, times, metrics))
-        else:
-            cutoff, buf = 0.0, []
-        rows = _sorted_rows(pdfs, ["event_id", "time", "metric"])
-        out = []
-        for row in rows.itertuples(index=False):
-            t = None if pd.isna(row.time) else float(row.time)
-            cutoff = max(cutoff, (t if t is not None else 0.0) - n_seconds)
-            send = t is None or t > cutoff
-            if send:
-                buf.append(
-                    (
-                        int(row.event_id),
-                        t,
-                        None if pd.isna(row.metric) else float(row.metric),
-                    )
-                )
-                buf = [e for e in buf if e[1] is None or e[1] > cutoff]
-                out.extend(
-                    (host, service, int(row.event_id), eid, et, em)
-                    for eid, et, em in buf
-                )
-        state.update(
-            (
-                cutoff,
-                [e[0] for e in buf],
-                [e[1] for e in buf],
-                [e[2] for e in buf],
-            )
-        )
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
+    def step(g, s, eid, t, m):
+        cutoff, buf = s
+        cutoff = max(cutoff, (t if t is not None else 0.0) - n_seconds)
+        if t is None or t > cutoff:
+            buf.append((eid, t, m))
+            buf = [e for e in buf if e[1] is None or e[1] > cutoff]
+            for e in buf:
+                g.emit(*g.key, eid, *e)
+        return cutoff, buf
 
-    return apply_with_state(
-        sdf, keys, update, out_schema, state_schema,
-        timeout=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        sdf, keys, out_schema, state_schema, ("event_id", "time", "metric"),
+        (0.0, [], [], []), step,
+        load=lambda st: (st[0], list(zip(*st[1:]))),
+        finish=lambda g, s: (s[0], *_columns(s[1], 3)),
+    )
 
 
 # ---------------------------------------------------------- coalesce --
@@ -296,50 +381,30 @@ def streaming_coalesce(
     )
     dt_ms = int(dt_seconds * 1000)
 
-    def update(key, pdfs, state: GroupState):
-        # The next-fire time is an ABSOLUTE deadline stored in state:
-        # data invocations re-arm the timeout to (deadline - now), never
-        # resetting the cadence — a key receiving events faster than dt
-        # still snapshots every dt (the reference emits every dt
-        # regardless of arrival rate, streams.clj:1227-1241). The
-        # deadline only advances when the timer actually fires.
-        host, service = key
-        now = state.getCurrentProcessingTimeMs()
-        if state.hasTimedOut:
-            st, metric, t, eid, _deadline = state.get
-            if st == "expired":
-                state.remove()  # emitted-once tombstone forgotten
-            else:
-                state.update((st, metric, t, eid, now + dt_ms))
-                state.setTimeoutDuration(dt_ms)
-            yield pd.DataFrame(
-                [[host, service, st, metric, t]],
-                columns=[f.name for f in out_schema.fields],
-            )
-            return
-        stored = state.get if state.exists else None
-        best = stored[:4] if stored is not None else None
-        deadline = stored[4] if stored is not None else now + dt_ms
-        rows = _sorted_rows(pdfs, ["event_id", "time", "metric", "state"])
-        for row in rows.itertuples(index=False):
-            cand = (
-                row.state,
-                None if pd.isna(row.metric) else float(row.metric),
-                float(row.time),
-                int(row.event_id),
-            )
-            if best is None or (cand[2], cand[3]) > (best[2], best[3]):
-                best = cand
-        if best is not None:
-            state.update((*best, deadline))
-            state.setTimeoutDuration(max(int(deadline - now), 1))
-        return
-        yield  # pragma: no cover — make this a generator
+    # The next-fire time is an ABSOLUTE deadline stored in state:
+    # data invocations re-arm the timeout to (deadline - now), never
+    # resetting the cadence — a key receiving events faster than dt
+    # still snapshots every dt (the reference emits every dt
+    # regardless of arrival rate, streams.clj:1227-1241). The
+    # deadline only advances when the timer actually fires.
+    def step(g, best, eid, t, m, st):
+        if best is None:
+            return st, m, t, eid, g.now + dt_ms
+        if _newer(t, eid, best[2], best[3]):
+            return st, m, t, eid, best[4]
+        return best
 
-    return apply_with_state(
-        sdf, keys, update, out_schema, state_schema,
-        timeout=GroupStateTimeout.ProcessingTimeTimeout,
-        )
+    def on_timer(g, s):
+        g.emit(*g.key, *s[:3])
+        if s[0] == "expired":
+            return None  # emitted-once tombstone forgotten
+        return (*s[:4], g.now + dt_ms)
+
+    return _keyed_fold(
+        sdf, keys, out_schema, state_schema,
+        ("event_id", "time", "metric", "state"), None, step,
+        on_timer=on_timer, deadline=lambda g, s: s[4], timeout=_PROC_TIMEOUT,
+    )
 
 
 # ------------------------------------------------ fixed event window --
@@ -371,29 +436,19 @@ def streaming_fixed_event_window(
         ]
     )
 
-    def update(key, pdfs, state: GroupState):
-        host, service = key
-        buf_m, buf_t, win = state.get if state.exists else ([], [], 0)
-        buf_m, buf_t = list(buf_m), list(buf_t)
-        rows = _sorted_rows(pdfs, ["event_id", "time", "metric"])
-        out = []
-        for row in rows.itertuples(index=False):
-            buf_m.append(0.0 if pd.isna(row.metric) else float(row.metric))
-            buf_t.append(float(row.time))
-            if len(buf_m) == n:
-                out.append(
-                    (host, service, win, float(sum(buf_m)), n, buf_t[0], buf_t[-1])
-                )
-                buf_m, buf_t = [], []
-                win += 1
-        state.update((buf_m, buf_t, win))
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
+    def step(g, s, eid, t, m):
+        buf_m, buf_t, win = s
+        buf_m.append(0.0 if m is None else m)
+        buf_t.append(t)
+        if len(buf_m) != n:
+            return s
+        g.emit(*g.key, win, float(sum(buf_m)), n, buf_t[0], buf_t[-1])
+        return [], [], win + 1
 
-    return apply_with_state(
-        sdf, keys, update, out_schema, state_schema,
-        timeout=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        sdf, keys, out_schema, state_schema, ("event_id", "time", "metric"),
+        ([], [], 0), step, load=lambda st: (list(st[0]), list(st[1]), st[2]),
+    )
 
 
 # ---------------------------------------------------------- fill-in --
@@ -435,46 +490,29 @@ def streaming_fill_in_last(
     )
     itv_ms = int(interval_seconds * 1000)
     update = update or {}
-    cols = [f.name for f in out_schema.fields]
 
-    def upd(key, pdfs, state: GroupState):
-        host, service = key
-        if state.hasTimedOut:
-            st, metric, _t, _eid = state.get
-            now = state.getCurrentProcessingTimeMs() / 1000.0
-            state.setTimeoutDuration(itv_ms)  # every! — periodic until expired
-            filler = {"state": st, "metric": metric, **update}
-            yield pd.DataFrame(
-                [[host, service, filler["state"], filler["metric"], now, "fill"]],
-                columns=cols,
-            )
-            return
-        last = state.get if state.exists else None
-        rows = _sorted_rows(pdfs, ["event_id", "time", "metric", "state"])
-        out = []
-        for row in rows.itertuples(index=False):
-            cand = (
-                row.state if isinstance(row.state, str) else None,
-                None if pd.isna(row.metric) else float(row.metric),
-                float(row.time),
-                int(row.event_id),
-            )
-            if last is None or (cand[2], cand[3]) > (last[2], last[3]):
-                last = cand
-            out.append([host, service, cand[0], cand[1], cand[2], None])
-        if last is not None and last[0] == "expired":
-            if state.exists:
-                state.remove()  # cancel the deferrable (streams.clj:698-701)
-        else:
-            state.update(tuple(last))
-            state.setTimeoutDuration(itv_ms)  # defer: gap measured from arrival
-        if out:
-            yield pd.DataFrame(out, columns=cols)
+    def step(g, last, eid, t, m, st):
+        g.emit(*g.key, st, m, t, None)
+        if last is None or _newer(t, eid, last[2], last[3]):
+            return st, m, t, eid
+        return last
 
-    return apply_with_state(
-        sdf, keys, upd, out_schema, state_schema,
-        timeout=GroupStateTimeout.ProcessingTimeTimeout,
-        )
+    def on_timer(g, s):
+        filler = {"state": s[0], "metric": s[1], **update}
+        g.emit(*g.key, filler["state"], filler["metric"], g.now / 1000.0, "fill")
+        return s
+
+    # defer: the gap is measured from the latest arrival or fire —
+    # every! repeats the filler until an expired event arrives
+    return _keyed_fold(
+        sdf, keys, out_schema, state_schema,
+        ("event_id", "time", "metric", "state"), None, step,
+        # an expired latest event cancels the deferrable
+        # (streams.clj:698-701)
+        finish=lambda g, s: None if s[0] == "expired" else s,
+        on_timer=on_timer, deadline=lambda g, s: g.now + itv_ms,
+        timeout=_PROC_TIMEOUT,
+    )
 
 
 # ------------------------------------------------------ batch n|dt --
@@ -517,58 +555,28 @@ def streaming_batch(
         ]
     )
     dt_ms = int(dt_seconds * 1000)
-    cols = [f.name for f in out_schema.fields]
 
-    def update(key, pdfs, state: GroupState):
-        host, service = key
-        now = state.getCurrentProcessingTimeMs()
-        if state.hasTimedOut:
-            buf_m, buf_t, bid, _deadline = state.get
-            buf_m, buf_t = list(buf_m), list(buf_t)
-            state.update(([], [], bid + (1 if buf_m else 0), now + dt_ms))
-            state.setTimeoutDuration(dt_ms)
-            if buf_m:
-                yield pd.DataFrame(
-                    [
-                        [
-                            host,
-                            service,
-                            bid,
-                            len(buf_m),
-                            float(sum(buf_m)),
-                            buf_t[0],
-                            buf_t[-1],
-                            "time",
-                        ]
-                    ],
-                    columns=cols,
-                )
-            return
-        if state.exists:
-            buf_m, buf_t, bid, deadline = state.get
-            buf_m, buf_t = list(buf_m), list(buf_t)
-        else:
-            buf_m, buf_t, bid, deadline = [], [], 0, now + dt_ms
-        rows = _sorted_rows(pdfs, ["event_id", "time", "metric"])
-        out = []
-        for row in rows.itertuples(index=False):
-            buf_m.append(0.0 if pd.isna(row.metric) else float(row.metric))
-            buf_t.append(float(row.time))
-            if len(buf_m) >= n:
-                out.append(
-                    (host, service, bid, n, float(sum(buf_m)), buf_t[0], buf_t[-1], "count")
-                )
-                buf_m, buf_t = [], []
-                bid += 1
-        state.update((buf_m, buf_t, bid, deadline))
-        state.setTimeoutDuration(max(int(deadline - now), 1))
-        if out:
-            yield pd.DataFrame(out, columns=cols)
+    def step(g, s, eid, t, m):
+        buf_m, buf_t, bid, deadline = s or ([], [], 0, g.now + dt_ms)
+        buf_m.append(0.0 if m is None else m)
+        buf_t.append(t)
+        if len(buf_m) < n:
+            return buf_m, buf_t, bid, deadline
+        g.emit(*g.key, bid, n, float(sum(buf_m)), buf_t[0], buf_t[-1], "count")
+        return [], [], bid + 1, deadline
 
-    return apply_with_state(
-        sdf, keys, update, out_schema, state_schema,
-        timeout=GroupStateTimeout.ProcessingTimeTimeout,
-        )
+    def on_timer(g, s):
+        buf_m, buf_t, bid, _deadline = s
+        if buf_m:
+            g.emit(*g.key, bid, len(buf_m), float(sum(buf_m)), buf_t[0],
+                   buf_t[-1], "time")
+        return [], [], bid + (1 if buf_m else 0), g.now + dt_ms
+
+    return _keyed_fold(
+        sdf, keys, out_schema, state_schema, ("event_id", "time", "metric"),
+        None, step, load=lambda st: (list(st[0]), list(st[1]), *st[2:]),
+        on_timer=on_timer, deadline=lambda g, s: s[3], timeout=_PROC_TIMEOUT,
+    )
 
 
 # -------------------------------------------------------------- top --
@@ -612,86 +620,59 @@ def streaming_top(
     delivering more than ``max_batch_rows`` rows trips a loud
     RuntimeError instead of silently becoming the cluster bottleneck."""
 
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            hosts, services, metrics, times = state.get
-            top = {
-                (h, s): (m, t)
-                for h, s, m, t in zip(hosts, services, metrics, times)
-            }
-        else:
-            top = {}
-        rows = _sorted_rows(
-            pdfs, ["event_id", "time", "metric", "host", "service", "state"]
-        )
-        if len(rows) > max_batch_rows:
+    def step(g, top, eid, t, value, host, service, ev_state):
+        if g.n > max_batch_rows:
             raise RuntimeError(
-                f"streaming_top received {len(rows)} rows in one micro-batch "
+                f"streaming_top received {g.n} rows in one micro-batch "
                 f"(limit {max_batch_rows}): it serializes on a single group — "
                 "feed it the latest-per-key index stream, not the raw firehose"
             )
-        out = []
+        ekey = (host, service)
+        if value is None or ev_state == "expired":
+            # drop the key; the dual view (streams.clj:1063-1066):
+            # already-expired events forward as-is to both streams,
+            # nil-metric live events expire on top, stay real on
+            # bottom (the dual falsy branch, streams.clj:127-152)
+            top.pop(ekey, None)
+            g.emit(host, service, value, t, "top", "expired")
+            bottom_st = ev_state if ev_state is not None else "expired"
+            g.emit(host, service, value, t, "bottom", bottom_st)
+            return top
+        in_top_before = ekey in top
+        smallest = min(top, key=lambda kk: top[kk][0]) if top else None
+        if (
+            not in_top_before
+            and len(top) >= k
+            and smallest is not None
+            and value <= top[smallest][0]
+        ):
+            # outside the top set: bottom gets e, top gets expired mirror
+            g.emit(host, service, value, t, "bottom", "ok")
+            g.emit(host, service, value, t, "top", "expired")
+            return top
+        top[ekey] = (value, t)
+        bumped = None
+        if len(top) > k:
+            bumped = min(top, key=lambda kk: top[kk][0])
+            bumped_val, bumped_t = top.pop(bumped)
+        g.emit(host, service, value, t, "top", "ok")
+        g.emit(host, service, value, t, "bottom", "expired")
+        if bumped is not None and bumped != ekey:
+            # lazy demotion: expired to top stream, real to bottom —
+            # rows carry the bumped event's own stored metric AND time
+            g.emit(*bumped, bumped_val, bumped_t, "top", "expired")
+            g.emit(*bumped, bumped_val, bumped_t, "bottom", "ok")
+        return top
 
-        def emit(h, s, m, t, stream, st):
-            out.append((h, s, m, t, stream, st))
-
-        for row in rows.itertuples(index=False):
-            ekey = (row.host, row.service)
-            value = None if pd.isna(row.metric) else float(row.metric)
-            t = float(row.time)
-            ev_state = row.state if isinstance(row.state, str) else None
-            if value is None or ev_state == "expired":
-                # drop the key; the dual view (streams.clj:1063-1066):
-                # already-expired events forward as-is to both streams,
-                # nil-metric live events expire on top, stay real on
-                # bottom (the dual falsy branch, streams.clj:127-152)
-                top.pop(ekey, None)
-                emit(row.host, row.service, value, t, "top", "expired")
-                bottom_st = ev_state if ev_state is not None else "expired"
-                emit(row.host, row.service, value, t, "bottom", bottom_st)
-                continue
-            in_top_before = ekey in top
-            smallest = min(top, key=lambda kk: top[kk][0]) if top else None
-            if (
-                not in_top_before
-                and len(top) >= k
-                and smallest is not None
-                and value <= top[smallest][0]
-            ):
-                # outside the top set: bottom gets e, top gets expired mirror
-                emit(row.host, row.service, value, t, "bottom", "ok")
-                emit(row.host, row.service, value, t, "top", "expired")
-                continue
-            top[ekey] = (value, t)
-            bumped = None
-            if len(top) > k:
-                bumped = min(top, key=lambda kk: top[kk][0])
-                bumped_val, bumped_t = top.pop(bumped)
-            emit(row.host, row.service, value, t, "top", "ok")
-            emit(row.host, row.service, value, t, "bottom", "expired")
-            if bumped is not None and bumped != ekey:
-                # lazy demotion: expired to top stream, real to bottom —
-                # rows carry the bumped event's own stored metric AND time
-                emit(bumped[0], bumped[1], bumped_val, bumped_t, "top", "expired")
-                emit(bumped[0], bumped[1], bumped_val, bumped_t, "bottom", "ok")
-
-        hs = list(top.keys())
-        state.update(
-            (
-                [h for h, _ in hs],
-                [s for _, s in hs],
-                [top[kk][0] for kk in hs],
-                [top[kk][1] for kk in hs],
-            )
-        )
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in TOP_OUT.fields])
-
-    one = sdf.withColumn("__g", F.lit(1))
-    return apply_with_state(
-        one, ("__g",), update, TOP_OUT, _TOP_STATE,
-        timeout=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        sdf.withColumn("__g", F.lit(1)), ("__g",), TOP_OUT, _TOP_STATE,
+        ("event_id", "time", "metric", "host", "service", "state"),
+        ([], [], [], []), step,
+        load=lambda st: {(h, s): (m, t) for h, s, m, t in zip(*st)},
+        finish=lambda g, top: tuple(
+            _columns([(*hs, *mt) for hs, mt in top.items()], 4)
+        ),
+    )
 
 
 # --------------------------------------------------------- throttle --
@@ -711,31 +692,22 @@ def streaming_throttle(
         [StructField("bucket", LongType()), StructField("sent", LongType())]
     )
 
-    def update(key, pdfs, state: GroupState):
-        host, service = key
-        bucket, sent = state.get if state.exists else (-(1 << 62), 0)
-        rows = _sorted_rows(pdfs, ["event_id", "time", "metric"])
-        out = []
-        for row in rows.itertuples(index=False):
-            b = int(math.floor(float(row.time) / dt))
-            if b > bucket:
-                bucket, sent = b, 0
-            elif b < bucket:
-                continue
-            if sent < n:
-                sent += 1
-                out.append(
-                    (host, service, int(row.event_id), float(row.time),
-                     None if pd.isna(row.metric) else float(row.metric))
-                )
-        state.update((bucket, sent))
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in _EV_OUT.fields])
+    def step(g, s, eid, t, m):
+        bucket, sent = s
+        b = math.floor(t / dt)
+        if b > bucket:
+            bucket, sent = b, 0
+        elif b < bucket:
+            return s
+        if sent >= n:
+            return bucket, sent
+        g.emit(*g.key, eid, t, m)
+        return bucket, sent + 1
 
-    return apply_with_state(
-        sdf, keys, update, _EV_OUT, state_schema,
-        timeout=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        sdf, keys, _EV_OUT, state_schema, ("event_id", "time", "metric"),
+        (-(1 << 62), 0), step,
+    )
 
 
 # ---------------------------------------------------------- changed --
@@ -764,28 +736,16 @@ def streaming_changed(
     )
     state_schema = StructType([StructField("prev", StringType())])
 
-    def update(key, pdfs, state: GroupState):
-        host, service = key
-        (prev,) = state.get if state.exists else (init,)
-        rows = _sorted_rows(pdfs, ["event_id", "time", "metric", field])
-        out = []
-        for row in rows.itertuples(index=False):
-            cur = getattr(row, field)
-            cur = None if (cur is None or (isinstance(cur, float) and pd.isna(cur))) else str(cur)
-            if cur != prev:
-                out.append(
-                    (host, service, int(row.event_id), float(row.time),
-                     None if pd.isna(row.metric) else float(row.metric), cur)
-                )
-            prev = cur
-        state.update((prev,))
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
+    def step(g, s, eid, t, m, cur):
+        cur = None if cur is None else str(cur)
+        if cur != s[0]:
+            g.emit(*g.key, eid, t, m, cur)
+        return (cur,)
 
-    return apply_with_state(
-        sdf, keys, update, out_schema, state_schema,
-        timeout=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        sdf, keys, out_schema, state_schema, ("event_id", "time", "metric", field),
+        (init,), step,
+    )
 
 
 def streaming_project(
@@ -868,63 +828,45 @@ def streaming_project(
     )
     state_schema = StructType(state_fields)
 
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            stored = [list(a) for a in state.get]
-        else:
-            stored = [[None] * n for _ in range(len(state_fields))]
-        ts, ids, ms = stored[0], stored[1], stored[2]
-        if with_expiry:
-            svcs, sts, ttls = stored[3], stored[4], stored[5]
-        cols_ = ["event_id", "time", "metric"] + extra + [f"pm{i}" for i in range(n)]
-        rows = _sorted_rows(pdfs, cols_)
-        out = []
-        now_s = state.getCurrentProcessingTimeMs() / 1000.0
-        for row in rows.itertuples(index=False):
-            t, eid = float(row.time), int(row.event_id)
-            m = None if pd.isna(row.metric) else float(row.metric)
-            for i in range(n):
-                if getattr(row, f"pm{i}") and (
-                    ts[i] is None or (ts[i], ids[i]) < (t, eid)
-                ):
-                    ts[i], ids[i], ms[i] = t, eid, m
-                    if with_expiry:
-                        svcs[i] = (
-                            row.service if isinstance(row.service, str) else None
-                        )
-                        sts[i] = (
-                            row.state if isinstance(row.state, str) else None
-                        )
-                        ttls[i] = None if pd.isna(row.ttl) else float(row.ttl)
-            if not with_expiry:
-                out.append((eid, t, *ms))
-                continue
-            # clean-expire: emit expired slots ONCE, then clear them
-            slot_cells = []
-            for i in range(n):
-                occupied = ts[i] is not None
-                expired = occupied and (
-                    sts[i] == "expired"
-                    or (ttls[i] is not None and ts[i] + ttls[i] < now_s)
-                )
-                if expired:
-                    slot_cells += [svcs[i], "expired", None, now_s]
-                    ts[i] = ids[i] = ms[i] = svcs[i] = sts[i] = ttls[i] = None
-                elif occupied:
-                    slot_cells += [svcs[i], sts[i], ms[i], ts[i]]
-                else:
-                    slot_cells += [None, None, None, None]
-            out.append((eid, t, *slot_cells))
-        state.update(
-            tuple([ts, ids, ms] + ([svcs, sts, ttls] if with_expiry else []))
-        )
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
+    def step(g, s, eid, t, m, *rest):
+        ts, ids, ms = s[:3]
+        flags = rest[3:] if with_expiry else rest
+        # a slot is occupied iff it holds an event id (its time may be null)
+        for i, hit in enumerate(flags):
+            if hit and (ids[i] is None or _newer(t, eid, ts[i], ids[i])):
+                ts[i], ids[i], ms[i] = t, eid, m
+                if with_expiry:
+                    s[3][i], s[4][i], s[5][i] = rest[:3]
+        if not with_expiry:
+            g.emit(eid, t, *ms)
+            return s
+        # clean-expire: emit expired slots ONCE, then clear them
+        now_s = g.now / 1000.0
+        svcs, sts, ttls = s[3:]
+        slot_cells = []
+        for i in range(n):
+            occupied = ids[i] is not None
+            expired = occupied and (
+                sts[i] == "expired"
+                or (None not in (ts[i], ttls[i]) and ts[i] + ttls[i] < now_s)
+            )
+            if expired:
+                slot_cells += [svcs[i], "expired", None, now_s]
+                for a in s:
+                    a[i] = None
+            elif occupied:
+                slot_cells += [svcs[i], sts[i], ms[i], ts[i]]
+            else:
+                slot_cells += [None, None, None, None]
+        g.emit(eid, t, *slot_cells)
+        return s
 
-    return apply_with_state(
-        flagged, ("__g",), update, out_schema, state_schema,
-        timeout=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        flagged, ("__g",), out_schema, state_schema,
+        ["event_id", "time", "metric", *extra, *(f"pm{i}" for i in range(n))],
+        tuple([None] * n for _ in state_fields), step,
+        load=lambda st: [list(a) for a in st], finish=lambda g, s: tuple(s),
+    )
 
 
 def streaming_anomaly_zscore(
@@ -958,53 +900,43 @@ def streaming_anomaly_zscore(
     )
     state_schema = StructType([StructField("buf", ArrayType(DoubleType()))])
 
-    def update(key, pdfs, state: GroupState):
-        host, service = key
-        buf = list(state.get[0]) if state.exists else []
-        rows = _sorted_rows(pdfs, ["event_id", "time", "metric"])
-        out = []
-        for row in rows.itertuples(index=False):
-            m = None if pd.isna(row.metric) else float(row.metric)
-            if m is None:
-                continue
-            n = len(buf)
-            if n >= min_prior:
-                # exact integer sums, ONE rounding to double via int/int
-                # true division — bit-identical to the batch operator's
-                # DECIMAL(38,6) sums cast to double (both are the
-                # nearest double of the same exact rational)
-                q = [int(round(x * 1e6)) for x in buf]
-                s1 = sum(q) / 10**6
-                s2 = sum(x * x for x in q) / 10**12
-                mean = s1 / n
-                var = s2 / n - mean * mean
-                # IEEE semantics, mirroring the SQL expression exactly:
-                # sqrt(neg) -> nan, x/0 -> +-inf, 0/0 -> nan; SQL treats
-                # nan as greater than any threshold, so nan/inf emit
-                denom = math.sqrt(var) if var >= 0 else float("nan")
-                if denom == 0.0:
-                    z = (
-                        float("nan")
-                        if m == mean
-                        else math.copysign(float("inf"), m - mean)
-                    )
-                else:
-                    z = (m - mean) / denom
-                if (z != z) or abs(z) > threshold:
-                    out.append(
-                        (host, service, int(row.event_id), float(row.time), m, z)
-                    )
-            buf.append(m)
-            if len(buf) > n_window:
-                buf.pop(0)
-        state.update((buf,))
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
+    def step(g, buf, eid, t, m):
+        if m is None:
+            return buf
+        n = len(buf)
+        if n >= min_prior:
+            # exact integer sums, ONE rounding to double via int/int
+            # true division — bit-identical to the batch operator's
+            # DECIMAL(38,6) sums cast to double (both are the
+            # nearest double of the same exact rational)
+            q = [int(round(x * 1e6)) for x in buf]
+            s1 = sum(q) / 10**6
+            s2 = sum(x * x for x in q) / 10**12
+            mean = s1 / n
+            var = s2 / n - mean * mean
+            # IEEE semantics, mirroring the SQL expression exactly:
+            # sqrt(neg) -> nan, x/0 -> +-inf, 0/0 -> nan; SQL treats
+            # nan as greater than any threshold, so nan/inf emit
+            denom = math.sqrt(var) if var >= 0 else float("nan")
+            if denom == 0.0:
+                z = (
+                    float("nan")
+                    if m == mean
+                    else math.copysign(float("inf"), m - mean)
+                )
+            else:
+                z = (m - mean) / denom
+            if (z != z) or abs(z) > threshold:
+                g.emit(*g.key, eid, t, m, z)
+        buf.append(m)
+        if len(buf) > n_window:
+            buf.pop(0)
+        return buf
 
-    return apply_with_state(
-        sdf, keys, update, out_schema, state_schema,
-        timeout=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        sdf, keys, out_schema, state_schema, ("event_id", "time", "metric"),
+        ([],), step, load=lambda st: list(st[0]), finish=lambda g, buf: (buf,),
+    )
 
 
 # ---------------------------------------- ingest-time minhash dedup --
@@ -1061,28 +993,15 @@ def streaming_dedup_minhash(
     )
     state_schema = StructType([StructField("claimant", LongType())])
 
-    def update(key, pdfs, state: GroupState):
-        (band,) = key
-        claimant = int(state.get[0]) if state.exists else None
-        parts = [pdf[["doc_id"]] for pdf in pdfs]
-        rows = (
-            pd.concat(parts, ignore_index=True).sort_values("doc_id")
-            if parts
-            else pd.DataFrame(columns=["doc_id"])
-        )
-        out = []
-        for d in rows["doc_id"]:
-            d = int(d)
-            claimant = d if claimant is None else min(claimant, d)
-            out.append((band, d, claimant))
-        state.update((claimant,))
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
+    def step(g, claimant, d):
+        claimant = d if claimant is None else min(claimant, d)
+        g.emit(g.key[0], d, claimant)
+        return claimant
 
-    return apply_with_state(
-        exploded, ["band"], update, out_schema, state_schema,
-        timeout=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        exploded, ["band"], out_schema, state_schema, ("doc_id",), None, step,
+        load=lambda st: st[0], finish=lambda g, c: (c,),
+    )
 
 
 # -------------------------------------------------- wall-clock rollup --
@@ -1141,56 +1060,32 @@ def streaming_rollup(
         ]
     )
     dt_ms = int(dt_seconds * 1000)
-    cols = [f.name for f in out_schema.fields]
 
-    def update(key, pdfs, state: GroupState):
-        host, service = key
-        now = state.getCurrentProcessingTimeMs()
-        if state.hasTimedOut:
-            sent, bn, bsum, bt0, bt1, bstate, deadline = state.get
-            if not bn and not sent:
-                state.remove()  # idle window: go quiet, don't tick forever
-                return
-            if bn:
-                yield pd.DataFrame(
-                    [[host, service, now / 1000.0, None, bstate,
-                      bn, bsum, bt0, bt1]],
-                    columns=cols,
-                )
-            # reset: a carried-over flush consumes next window's budget
-            state.update((1 if bn else 0, 0, 0.0, None, None, None,
-                          now + dt_ms))
-            state.setTimeoutDuration(dt_ms)
-            return
-        if state.exists:
-            sent, bn, bsum, bt0, bt1, bstate, deadline = state.get
-        else:
-            sent, bn, bsum, bt0, bt1, bstate = 0, 0, 0.0, None, None, None
-            deadline = now + dt_ms
-        rows = _sorted_rows(pdfs, ["event_id", "time", "metric", "state"])
-        out = []
-        for row in rows.itertuples(index=False):
-            m = None if pd.isna(row.metric) else float(row.metric)
-            st = row.state if isinstance(row.state, str) else None
-            t = float(row.time)
-            sent += 1
-            if sent <= n:
-                out.append((host, service, t, m, st, None, None, None, None))
-            else:
-                bn += 1
-                bsum += m if m is not None else 0.0
-                bt0 = t if bt0 is None else bt0
-                bt1 = t
-                bstate = st
-        state.update((sent, bn, bsum, bt0, bt1, bstate, deadline))
-        state.setTimeoutDuration(max(int(deadline - now), 1))
-        if out:
-            yield pd.DataFrame(out, columns=cols)
-
-    return apply_with_state(
-        sdf, keys, update, out_schema, state_schema,
-        timeout=GroupStateTimeout.ProcessingTimeTimeout,
+    def step(g, s, eid, t, m, st):
+        sent, bn, bsum, bt0, bt1, bstate, deadline = (
+            s or (0, 0, 0.0, None, None, None, g.now + dt_ms)
         )
+        sent += 1
+        if sent <= n:
+            g.emit(*g.key, t, m, st, None, None, None, None)
+            return sent, bn, bsum, bt0, bt1, bstate, deadline
+        bsum += m if m is not None else 0.0
+        return sent, bn + 1, bsum, bt0 if bn else t, t, st, deadline
+
+    def on_timer(g, s):
+        sent, bn, bsum, bt0, bt1, bstate, _deadline = s
+        if not bn and not sent:
+            return None  # idle window: go quiet, don't tick forever
+        if bn:
+            g.emit(*g.key, g.now / 1000.0, None, bstate, bn, bsum, bt0, bt1)
+        # reset: a carried-over flush consumes next window's budget
+        return 1 if bn else 0, 0, 0.0, None, None, None, g.now + dt_ms
+
+    return _keyed_fold(
+        sdf, keys, out_schema, state_schema,
+        ("event_id", "time", "metric", "state"), None, step,
+        on_timer=on_timer, deadline=lambda g, s: s[6], timeout=_PROC_TIMEOUT,
+    )
 
 
 # ---------------------------------------------------- wall-clock rate --
@@ -1242,66 +1137,44 @@ def streaming_rate_interval(
         ]
     )
     itv_ms = int(interval * 1000)
-    cols = [f.name for f in out_schema.fields]
 
-    def update(key, pdfs, state: GroupState):
-        now = state.getCurrentProcessingTimeMs()
-        if state.hasTimedOut:
-            th, ts, tst, ttl, sm, deadline, expires = state.get
-            if expires is not None and expires < now / 1000.0:
-                state.remove()  # most recent event expired: stop
-                return
-            new_ttl = ttl - interval if ttl is not None else None
-            yield pd.DataFrame(
-                [[th, ts, tst, sm / interval, now / 1000.0, new_ttl]],
-                columns=cols,
-            )
-            state.update((th, ts, tst, new_ttl, 0.0, deadline + itv_ms,
-                          expires))
-            state.setTimeoutDuration(max(int(deadline + itv_ms - now), 1))
-            return
-        cur = state.get if state.exists else None
-        rows = _sorted_rows(pdfs, ["event_id", "time", "metric", "state",
-                                   "host", "service", "ttl"])
-        stopped = False
-        for row in rows.itertuples(index=False):
-            st = row.state if isinstance(row.state, str) else None
-            if st == "expired":
-                stopped = True  # cancel the poller (streams.clj:524-528)
-                continue
-            stopped = False
-            m = None if pd.isna(row.metric) else float(row.metric)
-            if m is None:
-                continue
-            ttl_in = None if pd.isna(row.ttl) else float(row.ttl)
-            t_in = None if pd.isna(row.time) else float(row.time)
-            expires = (t_in + ttl_in) if (ttl_in is not None and
-                                          t_in is not None) else None
-            if cur is None:
-                cur = (row.host, row.service, st,
-                       ttl_in + interval if ttl_in is not None else None,
-                       m, now + itv_ms, expires)
-            else:
-                # a restart after an expired-stop re-anchors the cadence
-                deadline = cur[5] if cur[5] is not None else now + itv_ms
-                cur = (row.host, row.service, st,
-                       ttl_in + interval if ttl_in is not None else cur[3],
-                       cur[4] + m, deadline, expires)
-        if cur is None:
-            return
-        if stopped:
-            # template kept, timer NOT re-armed; null deadline marks it
-            state.update((*cur[:5], None, cur[6]))
-            return
-        state.update(cur)
-        state.setTimeoutDuration(max(int(cur[5] - now), 1))
-        return
-        yield  # pragma: no cover — make this a generator
+    # The fold state is (stored tuple, stopped): an expired event
+    # cancels the poller (streams.clj:524-528) — the template is kept
+    # but the timer is NOT re-armed (null deadline) unless a later
+    # live event of the same invocation restarts it.
+    def step(g, s, eid, t_in, m, st, host, service, ttl_in):
+        if st == "expired":
+            return None if s is None else (s[0], True)
+        if m is None:
+            return None if s is None else (s[0], False)
+        expires = (t_in + ttl_in) if (ttl_in is not None and
+                                      t_in is not None) else None
+        if s is None:
+            return (host, service, st,
+                    ttl_in + interval if ttl_in is not None else None,
+                    m, g.now + itv_ms, expires), False
+        cur = s[0]
+        # a restart after an expired-stop re-anchors the cadence
+        deadline = cur[5] if cur[5] is not None else g.now + itv_ms
+        return (host, service, st,
+                ttl_in + interval if ttl_in is not None else cur[3],
+                cur[4] + m, deadline, expires), False
 
-    return apply_with_state(
-        sdf, keys, update, out_schema, state_schema,
-        timeout=GroupStateTimeout.ProcessingTimeTimeout,
-        )
+    def on_timer(g, s):
+        th, ts, tst, ttl, sm, deadline, expires = s[0]
+        if expires is not None and expires < g.now / 1000.0:
+            return None  # most recent event expired: stop
+        new_ttl = ttl - interval if ttl is not None else None
+        g.emit(th, ts, tst, sm / interval, g.now / 1000.0, new_ttl)
+        return (th, ts, tst, new_ttl, 0.0, deadline + itv_ms, expires), False
+
+    return _keyed_fold(
+        sdf, keys, out_schema, state_schema,
+        ("event_id", "time", "metric", "state", "host", "service", "ttl"),
+        None, step, load=lambda st: (st, False),
+        finish=lambda g, s: (*s[0][:5], None, s[0][6]) if s[1] else s[0],
+        on_timer=on_timer, deadline=lambda g, s: s[5], timeout=_PROC_TIMEOUT,
+    )
 
 
 # -------------------------------------- wall-clock constant sampler --
@@ -1342,55 +1215,31 @@ def streaming_interpolate_constant(
         ]
     )
     itv_ms = int(interval * 1000)
-    cols = [f.name for f in out_schema.fields]
 
-    def update(key, pdfs, state: GroupState):
-        host, service = key
-        now = state.getCurrentProcessingTimeMs()
-        if state.hasTimedOut:
-            st, metric, deadline, expires = state.get
-            if expires is not None and expires < now / 1000.0:
-                state.remove()  # latest event's ttl lapsed: stop
-                return
-            yield pd.DataFrame(
-                [[host, service, st, metric, now / 1000.0]],
-                columns=cols,
-            )
-            state.update((st, metric, deadline + itv_ms, expires))
-            state.setTimeoutDuration(max(int(deadline + itv_ms - now), 1))
-            return
-        cur = state.get if state.exists else None
-        rows = _sorted_rows(pdfs, ["event_id", "time", "metric", "state", "ttl"])
-        out = []
-        for row in rows.itertuples(index=False):
-            st = row.state if isinstance(row.state, str) else None
-            m = None if pd.isna(row.metric) else float(row.metric)
-            t = None if pd.isna(row.time) else float(row.time)
-            ttl = None if pd.isna(row.ttl) else float(row.ttl)
-            expires = (t + ttl) if (t is not None and ttl is not None) else None
-            if st == "expired":
-                # forward immediately, clean up, stop the poller
-                out.append([host, service, st, m, t])
-                cur = None
-                continue
-            if cur is None:
-                # delay-0 first tick: forward immediately, start ticking
-                out.append([host, service, st, m, now / 1000.0])
-                cur = (st, m, now + itv_ms, expires)
-            else:
-                cur = (st, m, cur[2], expires)
-        if cur is not None:
-            state.update(cur)
-            state.setTimeoutDuration(max(int(cur[2] - now), 1))
-        elif state.exists:
-            state.remove()
-        if out:
-            yield pd.DataFrame(out, columns=cols)
+    def step(g, cur, eid, t, m, st, ttl):
+        if st == "expired":
+            # forward immediately, clean up, stop the poller
+            g.emit(*g.key, st, m, t)
+            return None
+        expires = (t + ttl) if (t is not None and ttl is not None) else None
+        if cur is None:
+            # delay-0 first tick: forward immediately, start ticking
+            g.emit(*g.key, st, m, g.now / 1000.0)
+            return st, m, g.now + itv_ms, expires
+        return st, m, cur[2], expires
 
-    return apply_with_state(
-        sdf, keys, update, out_schema, state_schema,
-        timeout=GroupStateTimeout.ProcessingTimeTimeout,
-        )
+    def on_timer(g, s):
+        st, metric, deadline, expires = s
+        if expires is not None and expires < g.now / 1000.0:
+            return None  # latest event's ttl lapsed: stop
+        g.emit(*g.key, st, metric, g.now / 1000.0)
+        return st, metric, deadline + itv_ms, expires
+
+    return _keyed_fold(
+        sdf, keys, out_schema, state_schema,
+        ("event_id", "time", "metric", "state", "ttl"), None, step,
+        on_timer=on_timer, deadline=lambda g, s: s[2], timeout=_PROC_TIMEOUT,
+    )
 
 
 # --------------------------------------------- wall-clock derivative --
@@ -1438,70 +1287,46 @@ def streaming_ddt_interval(
         ]
     )
     itv_ms = int(n * 1000)
-    cols = [f.name for f in out_schema.fields]
 
-    def update(key, pdfs, state: GroupState):
-        host, service = key
-        now = state.getCurrentProcessingTimeMs()
-        if state.hasTimedOut:
-            e1_t, e1_m, e2_t, e2_m, cur_t, cur_m, deadline, expires = state.get
-            if expires is not None and expires < now / 1000.0:
-                state.remove()
-                return
-            if cur_t is not None:
-                e1_t, e1_m, e2_t, e2_m = e2_t, e2_m, cur_t, cur_m
-            else:
-                e1_t, e1_m = e2_t, e2_m  # empty interval: zero emission
-            out = None
-            if e1_t is not None and e2_t is not None:
-                dt = e2_t - e1_t
-                m = 0.0 if dt == 0 else (e2_m - e1_m) / dt
-                out = [[host, service, now / 1000.0, m]]
-            state.update((e1_t, e1_m, e2_t, e2_m, None, None,
-                          deadline + itv_ms, expires))
-            state.setTimeoutDuration(max(int(deadline + itv_ms - now), 1))
-            if out:
-                yield pd.DataFrame(out, columns=cols)
-            return
-        cur = state.get if state.exists else None
-        rows = _sorted_rows(pdfs, ["event_id", "time", "metric", "state", "ttl"])
-        stopped = False
-        for row in rows.itertuples(index=False):
-            st = row.state if isinstance(row.state, str) else None
-            if st == "expired":
-                stopped = True
-                continue
-            stopped = False
-            m = None if pd.isna(row.metric) else float(row.metric)
-            t = None if pd.isna(row.time) else float(row.time)
-            ttl = None if pd.isna(row.ttl) else float(row.ttl)
-            expires = (t + ttl) if (t is not None and ttl is not None) else None
-            if cur is None:
-                if m is None:
-                    continue
-                # poller start: the delay-0 tick shifts the first
-                # event straight into the e2 sample slot, no emission
-                cur = (None, None, t, m, None, None, now + itv_ms, expires)
-            else:
-                deadline = cur[6] if cur[6] is not None else now + itv_ms
-                if m is not None:
-                    cur = (*cur[:4], t, m, deadline, expires)
-                else:
-                    cur = (*cur[:6], deadline, expires)  # poller liveness only
-        if cur is None:
-            return
-        if stopped:
-            state.update((*cur[:6], None, cur[7]))
-            return
-        state.update(cur)
-        state.setTimeoutDuration(max(int(cur[6] - now), 1))
-        return
-        yield  # pragma: no cover — make this a generator
+    # The fold state is (stored tuple, stopped), as in
+    # streaming_rate_interval: an expired event stops the poller.
+    def step(g, s, eid, t, m, st, ttl):
+        if st == "expired":
+            return None if s is None else (s[0], True)
+        expires = (t + ttl) if (t is not None and ttl is not None) else None
+        if s is None:
+            if m is None:
+                return None
+            # poller start: the delay-0 tick shifts the first
+            # event straight into the e2 sample slot, no emission
+            return (None, None, t, m, None, None, g.now + itv_ms, expires), False
+        cur = s[0]
+        deadline = cur[6] if cur[6] is not None else g.now + itv_ms
+        if m is not None:
+            return (*cur[:4], t, m, deadline, expires), False
+        return (*cur[:6], deadline, expires), False  # poller liveness only
 
-    return apply_with_state(
-        sdf, keys, update, out_schema, state_schema,
-        timeout=GroupStateTimeout.ProcessingTimeTimeout,
-        )
+    def on_timer(g, s):
+        e1_t, e1_m, e2_t, e2_m, cur_t, cur_m, deadline, expires = s[0]
+        if expires is not None and expires < g.now / 1000.0:
+            return None
+        if cur_t is not None:
+            e1_t, e1_m, e2_t, e2_m = e2_t, e2_m, cur_t, cur_m
+        else:
+            e1_t, e1_m = e2_t, e2_m  # empty interval: zero emission
+        if e1_t is not None and e2_t is not None:
+            dt = e2_t - e1_t
+            g.emit(*g.key, g.now / 1000.0, 0.0 if dt == 0 else (e2_m - e1_m) / dt)
+        return (e1_t, e1_m, e2_t, e2_m, None, None, deadline + itv_ms,
+                expires), False
+
+    return _keyed_fold(
+        sdf, keys, out_schema, state_schema,
+        ("event_id", "time", "metric", "state", "ttl"), None, step,
+        load=lambda st: (st, False),
+        finish=lambda g, s: (*s[0][:6], None, s[0][7]) if s[1] else s[0],
+        on_timer=on_timer, deadline=lambda g, s: s[6], timeout=_PROC_TIMEOUT,
+    )
 
 
 # -------------------------------------------- streaming bottom-k sample --
@@ -1561,36 +1386,21 @@ def streaming_bottomk(
         ]
     )
 
-    def update(key, pdfs, state: GroupState):
-        (shard,) = key
-        if state.exists:
-            version, prios, ids = state.get
-            pairs = [(float(p), int(i)) for p, i in zip(prios, ids)]
-        else:
-            version, pairs = 0, []
-        parts = [pdf[["doc_id", "priority"]] for pdf in pdfs]
-        if parts:
-            rows_ = pd.concat(parts, ignore_index=True).sort_values("doc_id")
-            pairs.extend(
-                (float(r.priority), int(r.doc_id))
-                for r in rows_.itertuples(index=False)
-            )
-        pairs.sort()
-        del pairs[k:]
-        version += 1
-        state.update(
-            (version, [p for p, _ in pairs], [i for _, i in pairs])
-        )
-        out = [(int(shard), version, i, p) for p, i in pairs]
-        if out:
-            yield pd.DataFrame(
-                out, columns=[f.name for f in out_schema.fields]
-            )
+    def step(g, s, doc_id, priority):
+        s[1].append((priority, doc_id))
+        return s
 
-    return apply_with_state(
-        rows, ["shard"], update, out_schema, state_schema,
-        timeout=GroupStateTimeout.NoTimeout,
-        )
+    def finish(g, s):
+        version, pairs = s[0] + 1, sorted(s[1])[:k]
+        for p, i in pairs:
+            g.emit(int(g.key[0]), version, i, p)
+        return (version, *_columns(pairs, 2))
+
+    return _keyed_fold(
+        rows, ["shard"], out_schema, state_schema, ("doc_id", "priority"),
+        (0, [], []), step,
+        load=lambda st: (st[0], list(zip(st[1], st[2]))), finish=finish,
+    )
 
 
 # ------------------------------------------------------- stable --
@@ -1645,7 +1455,6 @@ def streaming_stable(
             StructField("b_states", ArrayType(StringType())),
         ]
     )
-    cols = [f.name for f in out_schema.fields]
     rows = sdf.select(
         *keys,
         "event_id",
@@ -1655,82 +1464,59 @@ def streaming_stable(
         F.col(field).cast("string").alias("sval"),
     )
 
-    def upd(key, pdfs, state: GroupState):
-        host, service = (list(key) + [None, None])[:2]
-        now_s = state.getCurrentProcessingTimeMs() / 1000.0
-        if state.exists:
-            prev, has_prev, b_eids, b_times, b_metrics, b_states = state.get
-            buf = [
-                [int(e), float(t), None if m is None else float(m), s]
-                for e, t, m, s in zip(b_eids, b_times, b_metrics, b_states)
-            ]
-        else:
-            prev, has_prev, buf = None, 0, []
-        out = []
-        if state.hasTimedOut:
-            # the reference timeout closure: flush iff the head is
-            # >= dt old by the (virtual) wall — otherwise a newer
-            # buffer replaced the one this task was armed for
-            if buf and dt <= now_s - buf[0][1]:
-                out = [[host, service, e, t, m, s] for e, t, m, s in buf]
-                buf = []
-        else:
-            batch = _sorted_rows(pdfs, ["event_id", "time", "metric", "state", "sval"])
-            for row in batch.itertuples(index=False):
-                v = None if pd.isna(row.sval) else str(row.sval)
-                ev = [
-                    int(row.event_id),
-                    float(row.time),
-                    None if pd.isna(row.metric) else float(row.metric),
-                    row.state if isinstance(row.state, str) else None,
-                ]
-                if has_prev and v == prev:
-                    if not buf:
-                        out.append([host, service, *ev])  # stable: pass now
-                    else:
-                        buf.append(ev)
-                        if dt <= ev[1] - buf[0][1]:
-                            out.extend([host, service, *e] for e in buf)
-                            buf = []
-                else:
-                    prev, has_prev, buf = v, 1, [ev]
-        state.update(
-            (
-                prev,
-                has_prev,
-                [e[0] for e in buf],
-                [e[1] for e in buf],
-                [e[2] for e in buf],
-                [e[3] for e in buf],
-            )
-        )
-        if buf and confirm_wallclock:
-            # deadline anchored at buffer-head EVENT time + dt; when the
-            # head is already older than dt of wall clock (a replay of
-            # history), fire at the next tick (1 ms — GroupState
-            # requires a positive duration). confirm_wallclock=False
-            # disables this lane entirely: a DRAINED replay of
-            # historical events must prove stability by event-time
-            # span alone (the batch operator's semantics), because its
-            # wall clock says every historical buffer is "old".
-            state.setTimeoutDuration(
-                max(1, int(round((buf[0][1] + dt) * 1000)) - state.getCurrentProcessingTimeMs())
-            )
-        if out:
-            yield pd.DataFrame(out, columns=cols)
+    def emit_all(g, buf):
+        for e in buf:
+            g.emit(*(*g.key, None, None)[:2], *e)
 
-    return apply_with_state(
-        rows, keys, upd, out_schema, state_schema,
+    def step(g, s, eid, t, m, st, v):
+        prev, has_prev, buf = s
+        ev = [eid, t, m, st]
+        if not has_prev or v != prev:
+            return v, 1, [ev]
+        if not buf:
+            emit_all(g, [ev])  # stable: pass now
+            return s
+        buf.append(ev)
+        if None not in (t, buf[0][1]) and dt <= t - buf[0][1]:
+            emit_all(g, buf)
+            return prev, has_prev, []
+        return s
+
+    def on_timer(g, s):
+        # the reference timeout closure: flush iff the head is
+        # >= dt old by the (virtual) wall — otherwise a newer
+        # buffer replaced the one this task was armed for
+        prev, has_prev, buf = s
+        if buf and buf[0][1] is not None and dt <= g.now / 1000.0 - buf[0][1]:
+            emit_all(g, buf)
+            return prev, has_prev, []
+        return s
+
+    # deadline anchored at buffer-head EVENT time + dt; when the
+    # head is already older than dt of wall clock (a replay of
+    # history), fire at the next tick (1 ms — GroupState
+    # requires a positive duration). confirm_wallclock=False
+    # disables this lane entirely: a DRAINED replay of
+    # historical events must prove stability by event-time
+    # span alone (the batch operator's semantics), because its
+    # wall clock says every historical buffer is "old".
+    def deadline(g, s):
+        head = s[3][0] if s[3] else None  # an untimed head has no deadline
+        return None if head is None else int(round((head + dt) * 1000))
+
+    return _keyed_fold(
+        rows, keys, out_schema, state_schema,
+        ("event_id", "time", "metric", "state", "sval"),
+        (None, 0, [], [], [], []), step,
+        load=lambda st: (st[0], st[1], [list(e) for e in zip(*st[2:])]),
+        finish=lambda g, s: (s[0], s[1], *_columns(s[2], 4)),
+        on_timer=on_timer, deadline=deadline if confirm_wallclock else None,
         # NoTimeout when the wall-clock lane is off: registering
         # ProcessingTimeTimeout makes the micro-batch engine schedule
         # state-cleanup batches forever (processAllAvailable never
         # drains), and with no timer ever armed they do nothing
-        timeout=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if confirm_wallclock
-            else GroupStateTimeout.NoTimeout
-        ),
-        )
+        timeout=_PROC_TIMEOUT if confirm_wallclock else _NO_TIMEOUT,
+    )
 
 
 # --------------------------------------------------- clock-skew --
@@ -1769,52 +1555,29 @@ def streaming_clock_skew(sdf: DataFrame) -> DataFrame:
             StructField("arrs", ArrayType(DoubleType())),
         ]
     )
-    cols = [f.name for f in out_schema.fields]
     rows = sdf.select(
         "host", "event_id", "time", "metric", "state"
     ).withColumn("__g", F.lit(0))
 
-    def upd(key, pdfs, state: GroupState):
-        now_s = state.getCurrentProcessingTimeMs() / 1000.0
-        if state.exists:
-            hosts, times, arrs = state.get
-            clocks = {
-                h: (float(t), float(a))
-                for h, t, a in zip(hosts, times, arrs)
-            }
-        else:
-            clocks = {}
-        batch = _sorted_rows(pdfs, ["host", "event_id", "time", "metric", "state"])
-        out = []
-        for row in batch.itertuples(index=False):
-            h = row.host if isinstance(row.host, str) else None
-            st = row.state if isinstance(row.state, str) else None
-            t = float(row.time)
-            if st == "expired":
-                clocks.pop(h, None)
-                out.append(
-                    [h, int(row.event_id), t,
-                     None if pd.isna(row.metric) else float(row.metric), st]
-                )
-                continue
-            clocks[h] = (t, now_s)
-            proj = sorted(ct + (now_s - ca) for ct, ca in clocks.values())
-            delta = t - proj[len(proj) // 2] if proj else 0.0
-            out.append([h, int(row.event_id), t, delta, st])
-        state.update(
-            (
-                list(clocks.keys()),
-                [v[0] for v in clocks.values()],
-                [v[1] for v in clocks.values()],
-            )
-        )
-        if out:
-            yield pd.DataFrame(out, columns=cols)
+    def step(g, clocks, h, eid, t, m, st):
+        if st == "expired":
+            clocks.pop(h, None)
+            g.emit(h, eid, t, m, st)
+            return clocks
+        now_s = g.now / 1000.0
+        # a null time projects to a NaN clock, as a NaN time did
+        tc = math.nan if t is None else t
+        clocks[h] = (tc, now_s)
+        proj = sorted(ct + (now_s - ca) for ct, ca in clocks.values())
+        g.emit(h, eid, t, tc - proj[len(proj) // 2], st)
+        return clocks
 
-    return apply_with_state(
-        rows, ("__g",), upd, out_schema, state_schema,
-        timeout=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        rows, ("__g",), out_schema, state_schema,
+        ("host", "event_id", "time", "metric", "state"), ([], [], []), step,
+        load=lambda st: dict(zip(st[0], zip(st[1], st[2]))),
+        finish=lambda g, c: (list(c), *_columns(c.values(), 2)),
+    )
 
 
 # --------------------------------------------------- token budget --
@@ -1861,29 +1624,16 @@ def streaming_token_budget(
         ]
     )
     state_schema = StructType([StructField("cum", LongType())])
-    cols = [f.name for f in out_schema.fields]
 
-    def upd(key, pdfs, state: GroupState):
-        (part,) = key
-        cum = state.get[0] if state.exists else 0
-        parts = [pdf[["doc_id", "n_tok"]] for pdf in pdfs]
-        out = []
-        if parts:
-            batch = pd.concat(parts, ignore_index=True).sort_values("doc_id")
-            for row in batch.itertuples(index=False):
-                cum += int(row.n_tok)
-                out.append(
-                    [part, int(row.doc_id), int(row.n_tok), cum,
-                     cum <= budget]
-                )
-        state.update((cum,))
-        if out:
-            yield pd.DataFrame(out, columns=cols)
+    def step(g, cum, doc_id, n_tok):
+        cum += n_tok
+        g.emit(g.key[0], doc_id, n_tok, cum, cum <= budget)
+        return cum
 
-    return apply_with_state(
-        rows, ("part",), upd, out_schema, state_schema,
-        timeout=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        rows, ("part",), out_schema, state_schema, ("doc_id", "n_tok"), (0,),
+        step, load=lambda st: st[0], finish=lambda g, c: (c,),
+    )
 
 
 # ------------------------------------------------- url seen-filter --
@@ -1928,31 +1678,20 @@ def streaming_url_gate(sdf: DataFrame, n_shards: int = 8) -> DataFrame:
         ]
     )
     state_schema = StructType([StructField("bloom", BinaryType())])
-    cols = [f.name for f in out_schema.fields]
 
-    def upd(key, pdfs, state: GroupState):
-        (shard,) = key
-        blob = bytearray(state.get[0]) if state.exists else bytearray(1 << 17)
-        parts = [pdf[["doc_id", "url", "h"]] for pdf in pdfs]
-        out = []
-        if parts:
-            batch = pd.concat(parts, ignore_index=True).sort_values("doc_id")
-            for row in batch.itertuples(index=False):
-                pos = [int(row.h[5 * i : 5 * i + 5], 16) for i in range(4)]
-                seen = all(blob[p >> 3] >> (p & 7) & 1 for p in pos)
-                for p in pos:
-                    blob[p >> 3] |= 1 << (p & 7)
-                out.append(
-                    [int(shard), int(row.doc_id), row.url, seen, not seen]
-                )
-        state.update((bytes(blob),))
-        if out:
-            yield pd.DataFrame(out, columns=cols)
+    def step(g, blob, doc_id, url, h):
+        pos = [int(h[5 * i : 5 * i + 5], 16) for i in range(4)]
+        seen = all(blob[p >> 3] >> (p & 7) & 1 for p in pos)
+        for p in pos:
+            blob[p >> 3] |= 1 << (p & 7)
+        g.emit(int(g.key[0]), doc_id, url, seen, not seen)
+        return blob
 
-    return apply_with_state(
-        rows, ("shard",), upd, out_schema, state_schema,
-        timeout=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        rows, ("shard",), out_schema, state_schema, ("doc_id", "url", "h"),
+        (bytes(1 << 17),), step,
+        load=lambda st: bytearray(st[0]), finish=lambda g, b: (bytes(b),),
+    )
 
 
 def streaming_scd2(
@@ -1989,44 +1728,23 @@ def streaming_scd2(
         ]
     )
 
-    def update(key, pdfs, state: GroupState):
-        host, service = key
-        if state.exists:
-            prev, version, vfrom, n = state.get
-        else:
-            prev, version, vfrom, n = None, 0, 0, 0
-        rows = _sorted_rows(pdfs, ["event_id", "time", "time_us", "state"])
-        out = []
-        for row in rows.itertuples(index=False):
-            cur = row.state
-            cur = (
-                None
-                if (cur is None or (isinstance(cur, float) and pd.isna(cur)))
-                else str(cur)
-            )
-            t_us = int(row.time_us)
-            # version == 0 marks "no run open yet" — NULL is a regular
-            # state value (IS DISTINCT FROM semantics, matching the
-            # batch scd2_state_history oracle), so a run of NULL states
-            # versions and emits like any other.
-            if version == 0:
-                prev, version, vfrom, n = cur, 1, t_us, 1
-            elif cur == prev:
-                n += 1
-            else:
-                out.append(
-                    (host, service, int(version), prev, int(vfrom), t_us, int(n))
-                )
-                prev, version, vfrom, n = cur, version + 1, t_us, 1
-        state.update((prev, int(version), int(vfrom), int(n)))
-        if out:
-            yield pd.DataFrame(
-                out, columns=[f.name for f in out_schema.fields]
-            )
+    def step(g, s, eid, t, t_us, cur):
+        prev, version, vfrom, n = s
+        cur = None if cur is None else str(cur)
+        # version == 0 marks "no run open yet" — NULL is a regular
+        # state value (IS DISTINCT FROM semantics, matching the
+        # batch scd2_state_history oracle), so a run of NULL states
+        # versions and emits like any other.
+        if version == 0:
+            return cur, 1, t_us, 1
+        if cur == prev:
+            return prev, version, vfrom, n + 1
+        g.emit(*g.key, version, prev, vfrom, t_us, n)
+        return cur, version + 1, t_us, 1
 
-    return apply_with_state(
-        sdf, keys, update, out_schema, state_schema,
-        timeout=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        sdf, keys, out_schema, state_schema,
+        ("event_id", "time", "time_us", "state"), (None, 0, 0, 0), step,
     )
 
 
@@ -2056,32 +1774,23 @@ def streaming_funnel(
     state_schema = StructType(
         [StructField("stage", LongType()), StructField("t", DoubleType())]
     )
-    stage_of = {s: i for i, s in enumerate(stages)}
+    stage_of = {s: i + 1 for i, s in enumerate(stages)}
 
-    def update(key, pdfs, state: GroupState):
-        (host,) = key
-        stage, t_anchor = state.get if state.exists else (0, 0.0)
-        rows = _sorted_rows(pdfs, ["event_id", "time", "service"])
-        out = []
-        for row in rows.itertuples(index=False):
-            svc = row.service
-            if svc not in stage_of:
-                continue
-            want = stage_of[svc] + 1  # 1-based stage this event could reach
-            t = float(row.time)
-            if stage == 0 and want == 1:
-                stage, t_anchor = 1, t
-                out.append((host, 1, svc, t))
-            elif want == stage + 1 and t > t_anchor and t <= t_anchor + window_s:
-                stage, t_anchor = want, t
-                out.append((host, want, svc, t))
-        state.update((int(stage), float(t_anchor)))
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
+    def step(g, s, eid, t, svc):
+        stage, t_anchor = s
+        want = stage_of.get(svc)  # 1-based stage this event could reach
+        if stage == 0 and want == 1:
+            g.emit(*g.key, 1, svc, t)
+            return 1, t
+        if (want == stage + 1 and None not in (t, t_anchor)
+                and t_anchor < t <= t_anchor + window_s):
+            g.emit(*g.key, want, svc, t)
+            return want, t
+        return s
 
-    return apply_with_state(
-        sdf, keys, update, out_schema, state_schema,
-        timeout=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        sdf, keys, out_schema, state_schema, ("event_id", "time", "service"),
+        (0, 0.0), step,
     )
 
 
@@ -2114,43 +1823,21 @@ def streaming_cusum(
         [StructField("s", LongType()), StructField("i", LongType())]
     )
 
-    def update(key, pdfs, state: GroupState):
-        host, service = key
-        s, i = state.get if state.exists else (0, 0)
-        rows = _sorted_rows(
-            pdfs, ["event_id", "time", "metric", "mu", "sd"]
-        )
-        out = []
-        def rq(v: float) -> int:
-            # HALF_UP away from zero — Spark's F.round / DuckDB round();
-            # Python's round() is banker's and would diverge on exact .5
-            return (
-                int(math.floor(v * 1e6 + 0.5))
-                if v >= 0
-                else -int(math.floor(-v * 1e6 + 0.5))
-            )
+    def step(g, s, eid, t, m, mu, sd):
+        # mu/sd can be null for keys the upstream stream-static
+        # baseline left-join missed — skip, don't floor(nan)
+        if None in (m, mu, sd):
+            return s
+        acc, i = s
+        s_new = max(0, acc + _rq(m - mu - k_sigma * sd))
+        hq = _rq(h_sigma * sd)
+        if s_new > hq and acc <= hq:
+            g.emit(*g.key, i + 1, eid, s_new)
+        return s_new, i + 1
 
-        for row in rows.itertuples(index=False):
-            # mu/sd can be null for keys the upstream stream-static
-            # baseline left-join missed — skip, don't floor(nan)
-            if any(v is None or pd.isna(v) for v in (row.metric, row.mu, row.sd)):
-                continue
-            i += 1
-            dq = rq(row.metric - row.mu - k_sigma * row.sd)
-            hq = rq(h_sigma * row.sd)
-            s_new = max(0, s + dq)
-            if s_new > hq and s <= hq:
-                out.append((host, service, int(i), int(row.event_id), s_new))
-            s = s_new
-        state.update((int(s), int(i)))
-        if out:
-            yield pd.DataFrame(
-                out, columns=[f.name for f in out_schema.fields]
-            )
-
-    return apply_with_state(
-        sdf, keys, update, out_schema, state_schema,
-        timeout=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        sdf, keys, out_schema, state_schema,
+        ("event_id", "time", "metric", "mu", "sd"), (0, 0), step,
     )
 
 
@@ -2205,67 +1892,38 @@ def streaming_retrain_trigger(
         ]
     )
 
-    def rq(v: float) -> int:
-        # HALF_UP away from zero — Spark F.round / DuckDB round()
-        return (
-            int(math.floor(v * 1e6 + 0.5))
-            if v >= 0
-            else -int(math.floor(-v * 1e6 + 0.5))
-        )
-
     # 'no open window yet' sentinel: far below any reachable hourly
     # bucket (a plain -1 would collide with the legitimate window id
     # of pre-epoch events, time_us in [-7200s, -3600s) under
     # toward-zero truncation)
     NO_WINDOW = -(1 << 62)
 
-    def update(key, pdfs, state: GroupState):
-        host, service = key
-        b, sum_q, n, consec = (
-            state.get if state.exists else (NO_WINDOW, 0, 0, 0)
+    def step(g, s, eid, t, t_us, m, mu, sd):
+        if None in (m, mu, sd):
+            return s
+        b, sum_q, n, consec = s
+        # truncate toward ZERO, not floor — the oracle's DuckDB
+        # '//' and the repo's batch DIV convention both truncate,
+        # so a pre-epoch event (time_us in [-3600s, 0)) must land
+        # in window 0, not Python-floor's -1
+        rb = (
+            -((-t_us) // 3_600_000_000)
+            if t_us < 0
+            else t_us // 3_600_000_000
         )
-        rows = _sorted_rows(
-            pdfs, ["event_id", "time", "time_us", "metric", "mu", "sd"]
-        )
-        out = []
-        for row in rows.itertuples(index=False):
-            if any(
-                v is None or pd.isna(v)
-                for v in (row.metric, row.mu, row.sd)
-            ):
-                continue
-            # truncate toward ZERO, not floor — the oracle's DuckDB
-            # '//' and the repo's batch DIV convention both truncate,
-            # so a pre-epoch event (time_us in [-3600s, 0)) must land
-            # in window 0, not Python-floor's -1
-            t_us = int(row.time_us)
-            rb = (
-                -((-t_us) // 3_600_000_000)
-                if t_us < 0
-                else t_us // 3_600_000_000
+        if b != NO_WINDOW and rb != b:
+            drifted = (
+                frac_den * abs(sum_q - n * _rq(mu))
+                > frac_num * n * _rq(sd)
             )
-            if b != NO_WINDOW and rb != b:
-                mu_q, sd_q = rq(row.mu * 1.0), rq(row.sd * 1.0)
-                drifted = (
-                    frac_den * abs(sum_q - n * mu_q)
-                    > frac_num * n * sd_q
-                )
-                consec = consec + 1 if drifted else 0
-                if drifted and consec == m_windows:
-                    out.append(
-                        (host, service, int(b), int(n), int(sum_q))
-                    )
-                sum_q, n = 0, 0
-            b = rb
-            sum_q += rq(row.metric)
-            n += 1
-        state.update((int(b), int(sum_q), int(n), int(consec)))
-        if out:
-            yield pd.DataFrame(
-                out, columns=[f.name for f in out_schema.fields]
-            )
+            consec = consec + 1 if drifted else 0
+            if drifted and consec == m_windows:
+                g.emit(*g.key, b, n, sum_q)
+            sum_q, n = 0, 0
+        return rb, sum_q + _rq(m), n + 1, consec
 
-    return apply_with_state(
-        sdf, keys, update, out_schema, state_schema,
-        timeout=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        sdf, keys, out_schema, state_schema,
+        ("event_id", "time", "time_us", "metric", "mu", "sd"),
+        (NO_WINDOW, 0, 0, 0), step,
     )

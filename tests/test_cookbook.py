@@ -248,3 +248,36 @@ def test_recipe_10_monitoring_warehouse(spark, events):
     wm = {r["delay_s"]: r["n_dropped"]
           for r in QUERIES["watermark_sizing_report"](spark, sf).collect()}
     assert wm[0] >= wm[10] >= wm[60] >= wm[300]
+
+
+def test_recipe_11_keyed_fold(spark):
+    """A new per-key operator on the keyed-fold harness, tested
+    without Spark through the virtual-clock testkit."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from riemann_spark.streaming.stateful_ops import _keyed_fold
+    from riemann_spark.streaming.testkit import run_stream_intervals
+
+    def streaming_flaps(sdf, keys=("host", "service")):
+        out = StructType([StructField("host", StringType()),
+                          StructField("service", StringType()),
+                          StructField("event_id", LongType()),
+                          StructField("flaps", LongType())])
+        state = StructType([StructField("prev", StringType()),
+                            StructField("flaps", LongType())])
+
+        def step(g, s, eid, t, st):
+            prev, flaps = s
+            if prev is not None and st != prev:
+                flaps += 1
+                g.emit(*g.key, eid, flaps)
+            return st, flaps
+
+        return _keyed_fold(sdf, keys, out, state,
+                           ("event_id", "time", "state"), (None, 0), step)
+
+    ev = lambda st: {"host": "h", "service": "s", "state": st}  # noqa: E731
+    out = run_stream_intervals(
+        streaming_flaps, [ev("ok"), None, ev("critical"), None, ev("ok"), None]
+    )
+    assert [r["flaps"] for r in out] == [1, 2]
